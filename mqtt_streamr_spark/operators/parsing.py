@@ -10,39 +10,56 @@ reference dead-letters those messages) and silent data mangling (the
 second half of the payload vanishes). Probing Spark 4.1's parser shows
 this is the ONLY leniency: single quotes, unquoted keys, comments,
 trailing commas, leading zeros, NaN/Infinity are all already rejected,
-matching JS ``JSON.parse``.
+matching JS ``JSON.parse``. (Duplicate object keys, which JS accepts
+with the last value winning, need ``spark.sql.variant.allowDuplicateKeys``
+— set in ``session.get_spark``.)
 
-``strict_json_complete`` closes the gap without leaving the JVM:
+``strict_json_complete`` closes the gap without leaving the JVM. Both
+checks run over the payload trimmed of JSON whitespace:
 
-- scalar roots: one anchored regex over the whitespace-trimmed payload
-  (the full JSON scalar grammar is regular);
-- container roots: three facts that, given ``try_parse_json`` already
-  certified the leading value, hold exactly when nothing follows it —
-  the trimmed payload ends with a closer, the bracket depth over the
-  structural brackets returns to zero exactly once, and the final
-  depth is zero. Structural brackets are extracted in ONE
-  ``regexp_replace`` pass (string literals and non-bracket characters
-  are both dropped by a single alternation — string contents are the
-  only place brackets are not structural). The depth facts are then
-  certified by a bounded-depth balanced-bracket regex (``rlike``,
-  codegen'd): the bracket language is only non-regular for UNBOUNDED
-  nesting, so a machine-generated depth-<=8 matcher covers essentially
-  every real payload. Only payloads the certificate can't clear
-  (nesting deeper than 8, or genuine trailing junk) fall to the exact
-  single-pass ``aggregate`` scan. No UDF, no Python.
+- scalar roots: one anchored regex (the JSON scalar grammar is regular);
+- container roots: one ``rlike`` certificate, then an exact fallback for
+  the rows it does not clear. The certificate matches one bracketed
+  group spanning the whole trimmed text, nested at most 8 deep. It is
+  built level by level as
+  ``[\\[{](?:[^\\[\\]{}"]++|<string literal>|<one level less>)*+[\\]}]``:
+  runs of filler, whole string literals (the only place a bracket is not
+  structural) or a nested group, between an opener and a closer of
+  either type. The fallback is the exact path: the text must end with a
+  closer, and over its structural brackets — extracted by ONE
+  ``regexp_replace`` that drops string literals and filler — the depth
+  must return to zero exactly once and end at zero (an ``aggregate``
+  scan). No UDF, no Python.
 
-Cost (bench's ~100-char event payloads, 2M rows, 8 local threads,
-wall-clock per row): parse-only floor 0.74 us; r8's always-aggregate
-let-bound formulation +3.9 us; this r9 regex-certificate fast path
-+1.4 us on clean payloads (2.8x less) and +4.0 us on a 50%-adversarial
-corpus (was +27) — the HOF ``aggregate`` (the only non-codegen piece)
-now runs only on rows the certificate can't clear. The streaming pipeline applies the check by default
-(``PipelineSpec.strict_parse``) because the reference contract is
-strict, with the flag as the opt-out for callers who prefer the raw
+Why a certificate match is sound: ``try_parse_json`` has already
+certified that the payload STARTS with one valid JSON value V, so within
+V strings are well formed and brackets pair up by type. The
+certificate's tokenization is forced by each first character (quote ->
+string literal, bracket -> group, anything else -> filler), so on V it
+counts exactly the structural brackets and its outermost group ends at
+the first depth-zero return, which is V's last character. The match
+requires that character to be the last of the trimmed text, i.e.
+nothing follows V. Closers of either type may match because V's
+brackets already pair up by type. A non-match proves nothing: those
+rows (trailing content, or nesting deeper than 8) take the exact
+fallback. Every quantifier is possessive — backtracking could not change
+the outcome — and Java runs possessive loops iteratively, so only the
+nesting recurses: a 200k-element array and a 1 MB string are checked
+without a stack overflow.
+Anchors are ``\\A``/``\\z``: Java's ``$`` also matches before a final
+U+2028/U+2029/U+0085, which JSON does not count as whitespace.
+
+Cost, per 100k benchmark payloads (~100-char events, 4 local threads,
+noop write, median of 7, two alternating runs): ``try_parse_json``
+alone 285-345 ms; the strict check adds 115-136 ms with this certificate,
+against 342-472 ms with the previous collapse-then-balanced-regex
+certificate (a ``regexp_replace`` plus a 4,841-character type-matched
+regex on every row). The streaming pipeline applies the check by
+default (``PipelineSpec.strict_parse``) because the reference contract
+is strict, with the flag as the opt-out for callers who prefer the raw
 ``try_parse_json`` leniency.
 
-Soundness of the raw-text ends-with-closer check (moved off the
-string-collapsed text in r9): a complete container payload's last
+Soundness of the exact fallback: a complete container payload's last
 trimmed character is always its root closer; conversely if trailing
 content exists, either its collapsed form contributes a structural
 bracket (caught by the depth facts — brackets inside UNTERMINATED
@@ -61,43 +78,50 @@ from pyspark.sql import Column
 # (trim itself is done with btrim over this exact char set)
 _JSON_WS = " \t\n\r"
 
-# one complete JSON scalar, anchored (Java regex)
-_SCALAR = (
-    r'^(-?(0|[1-9][0-9]*)(\.[0-9]+)?([eE][+-]?[0-9]+)?'
-    r'|true|false|null'
-    r'|"(\\.|[^"\\])*")$'
-)
+# one JSON string literal, unrolled (runs of plain characters between
+# escapes) and possessive throughout: the alternatives are disjoint, so
+# backtracking is pure cost, and Java runs possessive loops without
+# recursing per character — a greedy (\\.|[^"\\])* group recurses once
+# per character and overflows the stack on a long string. Valid strings
+# never contain raw newlines, so default non-DOTALL '.' is safe
+_STRING = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"'
 
-# one JSON string literal (valid strings never contain raw newlines, so
-# default non-DOTALL '.' is safe); possessive *+ — the alternatives are
-# disjoint, so backtracking is pure cost
-_STRING_LIT = r'"(\\.|[^"\\])*+"'
+# one complete JSON scalar over the trimmed payload (Java regex). \A..\z,
+# not ^..$: Java's $ also matches before a final U+2028/U+2029/U+0085,
+# which is not JSON whitespace and so survives the trim
+_SCALAR = (r'\A(?:-?(?:0|[1-9][0-9]*+)(?:\.[0-9]++)?(?:[eE][+-]?[0-9]++)?'
+           r'|true|false|null|' + _STRING + r')\z')
 
-# single collapse pass: drop complete string literals (the only place
-# brackets are not structural) AND every non-bracket character, leaving
-# only the structural brackets. An UNTERMINATED trailing string fails the
-# first alternative, so its quote/content fall to the char class and any
-# bracket inside it is kept — sound, because an unterminated string can
-# only occur in trailing junk, where a spurious bracket only pushes the
-# depth facts further from "complete".
-_STRING_OR_FILLER = _STRING_LIT + r"|[^\[\]{}]"
+# single collapse pass of the exact fallback: drop complete string
+# literals (the only place brackets are not structural) AND every
+# non-bracket character, leaving only the structural brackets. An
+# UNTERMINATED trailing string fails the first alternative, so its
+# quote/content fall to the char class and any bracket inside it is
+# kept — sound, because an unterminated string can only occur in
+# trailing junk, where a spurious bracket only pushes the depth facts
+# further from "complete".
+_STRING_OR_FILLER = _STRING + r"|[^\[\]{}]"
+
+# one certificate level: an opener, then possessive runs of filler,
+# string literals or the next level down, then a closer of either type
+# (try_parse_json has already checked that the types pair up)
+_CERT_LEVEL = r'[\[{](?:[^\[\]{}"]++|' + _STRING + r'%s)*+[\]}]'
 
 
-def _balanced_regex(max_depth: int) -> str:
-    """Machine-generate the depth-bounded single-root balanced-bracket
-    matcher: D1 = ({}|[]), Dk = ({Dk-1*}|[Dk-1*]). Non-capturing +
-    possessive — the language is prefix-deterministic (every group starts
-    at its opener and ends at its matched closer), so backtracking could
-    never change the outcome, only cost."""
-    d = r"(?:\{\}|\[\])"
+def _certificate(max_depth: int) -> str:
+    """The depth-bounded completeness certificate, built level by level.
+    Possessive throughout: the tokenization is forced by each first
+    character, so backtracking could never change the outcome; only the
+    nesting (at most ``max_depth``) recurses."""
+    level = _CERT_LEVEL % ""
     for _ in range(max_depth - 1):
-        d = r"(?:\{(?:%s)*+\}|\[(?:%s)*+\])" % (d, d)
-    return "^" + d + "$"
+        level = _CERT_LEVEL % ("|" + level)
+    return r"\A" + level + r"\z"
 
 
 # depth 8 covers essentially all real payloads (bench's events nest <=3);
 # deeper payloads stay CORRECT via the exact aggregate scan, just slower
-_BALANCED_CERT = _balanced_regex(8)
+_CERT = _certificate(8)
 
 
 def strict_json_complete(payload: Column) -> Column:
@@ -130,21 +154,17 @@ def strict_json_complete(payload: Column) -> Column:
         return (state["zeros"] == 1) & (state["depth"] == 0)
 
     def _container_ok(t):
-        # `&` short-circuits in codegen, and CaseWhen branches evaluate
-        # lazily — a clean payload pays: ends-with substring + ONE
-        # collapse regexp_replace + ONE rlike, all codegen'd. The
-        # collapse is deliberately NOT let-bound: r8's let trick
-        # (element_at(transform(array(col)))) is itself a higher-order
-        # function, which forced the whole tree out of whole-stage
-        # codegen; re-evaluating the collapse on the RARE exact-scan
-        # branch is far cheaper than paying CodegenFallback on every
-        # row (measured overhead: let-bound 3.9 us/row -> unbound
-        # 1.4 us/row on the bench payload shape at 8 threads).
-        b = F.regexp_replace(t, _STRING_OR_FILLER, "")
-        return F.substring(t, -1, 1).isin("}", "]") & (
-            F.when(b.rlike(_BALANCED_CERT), F.lit(True))
-            .otherwise(_exact_scan(b))
-        )
+        # CaseWhen branches evaluate lazily — a complete payload of depth
+        # <= 8 pays ONE codegen'd rlike over the trimmed text. A row the
+        # certificate does not clear (trailing content, or deeper nesting)
+        # takes the exact path: it must end with a closer, and the depth
+        # facts must hold over its structural brackets. The collapse is
+        # deliberately NOT let-bound: a let (element_at(transform(array(
+        # col)))) is itself a higher-order function and would force the
+        # whole tree out of whole-stage codegen.
+        brackets = F.regexp_replace(t, _STRING_OR_FILLER, "")
+        return F.when(t.rlike(_CERT), F.lit(True)).otherwise(
+            F.substring(t, -1, 1).isin("}", "]") & _exact_scan(brackets))
 
     # btrim with an explicit char set is a simple scan (the r8 regex trim
     # + let-binding measured 3x the cost of re-running btrim per use)

@@ -37,8 +37,9 @@ def truncate_topic(topic: Column | str, levels: int | None) -> Column:
     topic = F.col(topic) if isinstance(topic, str) else topic
     if not levels or levels <= 0:
         return topic
-    # split with limit=-1 keeps trailing empties, matching JS String.split
-    return F.array_join(F.slice(F.split(topic, "/", -1), 1, levels + 1), "/")
+    # everything before the (levels+1)-th '/' (the whole topic when it has
+    # fewer): JS split/slice/join, without building a per-row array
+    return F.substring_index(topic, "/", levels + 1)
 
 
 def stream_id_from_template(

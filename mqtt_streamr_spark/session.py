@@ -64,6 +64,11 @@ def get_spark(
         # used = iterations needed, so this has no cost for normal plans.
         .config("spark.sql.analyzer.maxIterations", "300")
         .config("spark.sql.session.timeZone", "UTC")
+        # JSON.parse (the reference's validity check, bin:149-155) accepts
+        # a duplicate object key and keeps its last value; Spark's variant
+        # parser rejects the whole payload (try_parse_json -> NULL) unless
+        # duplicates are allowed, and then it also keeps the last value
+        .config("spark.sql.variant.allowDuplicateKeys", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

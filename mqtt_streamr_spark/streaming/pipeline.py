@@ -10,7 +10,9 @@ Engine dataflow (one micro-batch):
       -> try_parse_json + invalid-drop (dead-letter optional)
       -> compiled/interpreted JSONata transform
       -> stream_id Column (truncation + template / fixed id)
-      -> foreachBatch: per-key memoized sink init + partitioned write
+      -> foreachBatch: partitioned write (or publish), whose observed
+         metrics carry the counts and the routed keys for the memoized
+         per-key stream init
       -> IntervalLogger success/error counts.
 
 Scale notes: the hot path is pure Column work (codegen). The sink write is
@@ -75,13 +77,14 @@ class PipelineSpec:
     # driver memory at high-cardinality routing
     registry_max_size: int | None = None
     registry_ttl_seconds: float | None = None
-    # per-batch stream auto-create (bin:168-184 parity). True runs a
-    # distinct-keys collect each micro-batch to drive the memoized
-    # registry init — one driver round-trip per batch, keys-cardinality
-    # rows. Set False when streams are provisioned externally (the sink
-    # itself needs no per-key init — partitioned writes create
-    # directories on demand), removing the round-trip entirely (r7,
-    # SURVEY hard-part 6 follow-up).
+    # per-batch stream auto-create (bin:168-184 parity). True collects
+    # each micro-batch's distinct routed keys in the write's (or
+    # publish's) observed metrics — no Spark job of its own, a
+    # keys-cardinality set carried back with the action — and runs the
+    # memoized registry init for them. Set False when streams are
+    # provisioned externally (the sink itself needs no per-key init —
+    # partitioned writes create directories on demand), which drops the
+    # key set and the init (r7, SURVEY hard-part 6 follow-up).
     autocreate_streams: bool = True
     # strict JSON completeness (r8, reference parity): JSON.parse
     # (bin:149-155) rejects payloads with content after the first JSON
@@ -204,7 +207,10 @@ class StreamingBridge:
         # parse + invalid-drop (bin:149-155): record both streams.
         # try_parse_json validates the leading value's structure; the
         # strict completeness scan rejects trailing content, which
-        # try_parse_json silently truncates (JSON.parse parity, r8)
+        # try_parse_json silently truncates (JSON.parse parity, r8).
+        # The compiled transform reads this same variant, so each payload
+        # is parsed once: referenced twice, `parsed` stays in its own
+        # Project instead of being inlined into both uses
         df = df.withColumn("parsed", F.try_parse_json("payload"))
         valid = F.col("parsed").isNotNull()
         if self.spec.strict_parse:
@@ -242,6 +248,7 @@ class StreamingBridge:
                 self.spec.transform, F.col("payload"),
                 mode=self.spec.transform_mode,
                 schema=schema,
+                parsed_col=F.col("parsed"),
             )
             self.transform_backend = backend
             df = df.withColumn("message", out_col)
@@ -293,29 +300,32 @@ class StreamingBridge:
             F.col("message").isNotNull() if has_tf else F.lit(True)
         )
         tf_failed_cond = F.col("is_valid") & F.col("message").isNull()
-        invalid = batch.filter(~F.col("is_valid"))
 
-        # success/transform-error counts ride the WRITE job via observe()
-        # (one fewer action per micro-batch than a separate count); the
-        # sample/dead-letter/registry actions below deliberately use the
-        # UN-observed plan so a limit() can't populate the observation with
-        # partial counts
-        obs = Observation()
-        observed = batch.observe(
-            obs,
+        # success/transform-error counts and the routed keys ride the
+        # WRITE (or publish) job via observe() — no count or distinct-keys
+        # job of their own; the sample/dead-letter actions below
+        # deliberately use the UN-observed plan so a limit() can't
+        # populate the observation with partial counts
+        collect_keys = (not spec.dry_run and spec.autocreate_streams
+                        and spec.stream_id is None)
+        metrics = [
             F.sum(ok_cond.cast("long")).alias("n_ok"),
             F.sum(tf_failed_cond.cast("long")).alias("n_tf_err"),
-        )
+        ]
+        if collect_keys:
+            # collect_set skips the NULLs of rows that are not published
+            metrics.append(F.collect_set(
+                F.when(ok_cond, F.col("stream_id"))).alias("keys"))
+        obs = Observation()
+        observed = batch.observe(obs, *metrics)
         valid = observed.filter(ok_cond)
 
         # invalid-JSON drop is counted nowhere in the reference (only
         # console-logged, bin:153); dead-letter is our upgrade, and failed
-        # transforms dead-letter alongside
+        # transforms dead-letter alongside: every unpublished row, in one
+        # scan of the batch (is_valid is never NULL, so ~ok_cond is exact)
         if spec.dead_letter_dir:
-            dl = invalid
-            if has_tf:
-                dl = dl.unionByName(batch.filter(tf_failed_cond))
-            (dl.select("topic", "payload", "arrival_ts")
+            (batch.filter(~ok_cond).select("topic", "payload", "arrival_ts")
              .write.mode("append").format(spec.sink_format)
              .save(spec.dead_letter_dir))
 
@@ -327,18 +337,9 @@ class StreamingBridge:
 
         try:
             if not spec.dry_run:
-                if not spec.autocreate_streams:
-                    pass  # externally-provisioned streams: no init job
-                elif spec.stream_id is not None:
-                    # fixed stream: the one key is known statically —
-                    # memoized init without a per-batch Spark job
+                if spec.autocreate_streams and spec.stream_id is not None:
+                    # fixed stream: the one key is known statically
                     self.registry.get_or_create(spec.stream_id)
-                else:
-                    # memoized per-key init (bin:168-184); un-observed plan
-                    keys = (batch.filter(ok_cond)
-                            .select("stream_id").distinct())
-                    for row in keys.collect():
-                        self.registry.get_or_create(row["stream_id"])
                 if spec.publish_url is not None:
                     # network egress (bin:191-198): publish each routed
                     # message; counters reflect PUBLISH outcomes, exactly
@@ -375,6 +376,13 @@ class StreamingBridge:
                     got = obs.get  # populated by the write job
                     n_ok = int(got["n_ok"] or 0)
                     n_tf = int(got["n_tf_err"] or 0)
+                if collect_keys:
+                    # memoized per-key init (bin:168-184). It runs after
+                    # the action whose metrics carry the keys; the memo
+                    # has no external side effect, so the order is not
+                    # observable
+                    for key in got["keys"]:
+                        self.registry.get_or_create(key)
             else:
                 # dry run: no write job to observe; both counts in ONE
                 # aggregate action instead of two separate count() jobs

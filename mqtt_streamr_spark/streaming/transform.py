@@ -25,7 +25,9 @@ from mqtt_streamr_spark.jsonata.errors import NotCompilable
 
 def transform_to_json(expr: str, payload_col: Column, *,
                       mode: str = "auto",
-                      schema: str | None = None) -> tuple[Column, str]:
+                      schema: str | None = None,
+                      parsed_col: Column | None = None
+                      ) -> tuple[Column, str]:
     """Build a Column mapping a JSON-string payload to the transformed
     JSON-string output. Returns (column, backend) where backend is
     'typed', 'compiled' or 'interpreted'.
@@ -36,6 +38,9 @@ def transform_to_json(expr: str, payload_col: Column, *,
     typed fast path compiles over from_json(payload, schema) — struct
     navigation inside whole-stage codegen instead of variant expression
     eval. Fields outside the schema read as undefined.
+    parsed_col: ``try_parse_json(payload_col)`` when the caller already
+    has it (the bridge parses once for validity); the compiled backend
+    then navigates that variant instead of parsing the payload again.
 
     Backend cost model (r8): 'auto' is not "compiled wherever possible"
     but "the measured-fastest correct backend per construct class"
@@ -78,10 +83,10 @@ def transform_to_json(expr: str, payload_col: Column, *,
         return _interpreted_udf(expr)(payload_col), "interpreted"
     if mode in ("auto", "compiled"):
         try:
-            col = compile_to_json(
-                parsed.ast, F.try_parse_json(payload_col),
-                raw_col=payload_col,
-            )
+            if parsed_col is None:
+                parsed_col = F.try_parse_json(payload_col)
+            col = compile_to_json(parsed.ast, parsed_col,
+                                  raw_col=payload_col)
             return col, "compiled"
         except NotCompilable:
             if mode == "compiled":

@@ -548,7 +548,11 @@ def test_strict_json_complete_matches_js_json_parse(spark):
     """Exact parity with JS JSON.parse (the reference's validity oracle,
     bin:149-155) over the divergence-hunting corpus: trailing content,
     braces/escapes inside strings, bracket garbage tails, scalars,
-    whitespace padding, NaN (JS-invalid, Python-json-valid)."""
+    whitespace padding, NaN (JS-invalid, Python-json-valid), duplicate
+    keys (JS-valid, last value wins), and the certificate's edges:
+    escapes next to closers, nesting past its depth bound, line
+    terminators Java's $ would accept, and payloads long enough to
+    overflow a per-character recursive regex."""
     import json
 
     import pyspark.sql.functions as F
@@ -564,6 +568,27 @@ def test_strict_json_complete_matches_js_json_parse(spark):
         '[{"a":"b}"}]', '\t[1,2]\n', '{"a":1} x ]', '{"a":1} x {}',
         '{} "]"', '{"a":1}[', '{"a":1}]', '{} extra', "[1][2]",
         '{"a":1} }', "[]", "{}", '{"a":"x"}', '{"a":1} "x"}',
+        # duplicate keys, flat and nested
+        '{"a":1,"a":2}', '{"o":{"b":1,"b":[2]},"o":3}', '[{"k":0,"k":1}]',
+        '{"a":1,"a":2} x',
+        # an escaped backslash before a closing quote, then junk
+        '{"a":"x\\\\"} "}', '{"a":"x\\\\"}',
+        # an escaped closer, then a stray closer
+        '{"a":"\\u007d"}}', '{"a":"\\u007d"}', '["\\u005d"]]',
+        # brackets inside strings, then a tail
+        '{"a":"[{"} x', '["]}",{"k":"{["}] 1', '{"s":"}{"} {"t":"]["}',
+        '["[[[["]]',
+        # depth 9: past the certificate, decided by the exact scan
+        "[" * 9 + "1" + "]" * 9, "[" * 9 + "1" + "]" * 9 + " 1",
+        "[" * 9 + "1" + "]" * 10, '{"a":' * 9 + "1" + "}" * 9,
+        '{"a":' * 9 + '"}"' + "}" * 9 + " {}",
+        # Java line terminators: not JSON whitespace, so not trimmed
+        '"a"\u2028', "true\u2029", "{}\u0085", "1\u2028", "[1]\u2028",
+        # long payloads: a 200k-element array and a 1 MB string
+        "[" + ",".join(["1"] * 200_000) + "]",
+        "[" + ",".join(['"a"'] * 200_000) + "] ]",
+        '"' + "x" * 1_000_000 + '"', '{"s":"' + "x" * 1_000_000 + '"}',
+        '["' + "x" * 1_000_000 + '"] 1',
     ]
 
     def js_ok(p):
@@ -583,7 +608,7 @@ def test_strict_json_complete_matches_js_json_parse(spark):
          & strict_json_complete(F.col("payload"))).alias("ok"),
     ).collect()
     bad = [
-        (r["payload"], bool(r["ok"]) if r["ok"] is not None else False,
+        (r["payload"][:80], bool(r["ok"]) if r["ok"] is not None else False,
          js_ok(r["payload"]))
         for r in out
         if (bool(r["ok"]) if r["ok"] is not None else False)

@@ -35,6 +35,29 @@ def test_truncate_topic(spark, topic, levels, expected):
     assert _eval(spark, truncate_topic(F.lit(topic), levels)) == expected
 
 
+def _js_truncate(topic, levels):
+    """bin:99-106 restated: split on '/', keep levels+1 parts, rejoin."""
+    if topic is None or not levels or levels <= 0:
+        return topic
+    return "/".join(topic.split("/")[: levels + 1])
+
+
+def test_truncate_topic_column_matches_js(spark):
+    """truncate_topic over a real DataFrame column (not a folded literal)
+    agrees with the JS split/slice/join on the edge shapes: leading and
+    trailing '/', an empty middle level, fewer levels than asked, the
+    empty string and NULL."""
+    topics = ["/a/b/c", "a/b/c/", "/a/", "a//b", "a", "a/b", "", "/", "//",
+              "a/b/c/d/e", None]
+    df = spark.createDataFrame([(t,) for t in topics], "topic string")
+    for levels in (None, 0, 1, 2, 3, 5):
+        out = df.select(
+            "topic", truncate_topic(F.col("topic"), levels).alias("t")
+        ).collect()
+        got = [(r["topic"], r["t"]) for r in out]
+        assert got == [(t, _js_truncate(t, levels)) for t in topics], levels
+
+
 @pytest.mark.parametrize(
     "topic,template,levels,expected",
     [

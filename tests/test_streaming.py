@@ -187,11 +187,104 @@ def test_publish_back_to_broker(spark, tmpdirs):
         # payloads are the TRANSFORMED messages
         msg = json.loads(got[0][1])
         assert set(msg) == {"u", "kind", "v2"} and msg["kind"].isupper()
-        # streams were auto-created before publishing (bin:168-184)
+        # every routed stream was registered (bin:168-184); the keys ride
+        # the publish action's observed metrics, and the memo has no
+        # external side effect, so registering after the publish is not
+        # observable
         assert bridge.registry.stream_ids == sorted(topics)
     finally:
         sub.close()
         broker.close()
+
+
+def _bridge_input(spark, rows):
+    return spark.createDataFrame(rows, "topic string, payload string")
+
+
+def test_bridge_parses_each_payload_once(spark, tmpdirs):
+    """Plan guard: with a compiled transform, the bridge's executed plan
+    parses the payload exactly once — the validity check and the
+    transform share the `parsed` variant instead of the transform
+    calling try_parse_json(payload) again in each of its field reads."""
+    import re
+
+    spec = PipelineSpec(transform=TRANSFORM, sink_dir=tmpdirs["sink"],
+                        log_interval=3600)
+    bridge = StreamingBridge(spec)
+    planned = bridge.plan(replay_source(spark, EVENTS, streaming=False))
+    assert bridge.transform_backend == "compiled"
+    plan = planned._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"parseJson\(payload#", plan)) == 1
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_autocreate_streams_costs_no_extra_job(spark, tmpdirs):
+    """The per-key stream registration reads its keys from the write's
+    observed metrics, so autocreate_streams=True runs no more Spark jobs
+    per batch than autocreate_streams=False."""
+    src = replay_source(spark, EVENTS, streaming=False, malformed_every=7)
+    jobs = {}
+    for auto in (True, False):
+        spec = PipelineSpec(
+            transform=TRANSFORM, stream_id_template="/s/$topic",
+            topic_levels=2, dead_letter_dir=tmpdirs["dead"] + str(auto),
+            sink_dir=tmpdirs["sink"] + str(auto), log_interval=3600,
+            autocreate_streams=auto,
+        )
+        bridge = StreamingBridge(spec)
+        bridge.run_batch(src)  # warm: plan caches, codegen
+        jobs[auto] = _jobs_of(spark, lambda: bridge.run_batch(src))
+        assert (len(bridge.registry.stream_ids) == 5) is auto
+    assert jobs[True] <= jobs[False], jobs
+
+
+def test_registry_holds_exactly_the_published_streams(spark, tmpdirs):
+    """The registry equals the sink's stream ids: streams whose only rows
+    are invalid JSON or transform-NULL are never registered."""
+    rows = [
+        ("/ok/a", '{"v": 1}'), ("/ok/b", '{"v": 2}'), ("/ok/a", '{"v": 3}'),
+        ("/bad/json", '{"v": 4'), ("/bad/json", '{"v": 5} tail'),
+        ("/bad/null", '{"w": 6}'),  # no `v`: the transform is NULL
+        ("/ok/b", '{"v": 7}'),
+    ]
+    spec = PipelineSpec(transform="v * 10", sink_dir=tmpdirs["sink"],
+                        dead_letter_dir=tmpdirs["dead"], log_interval=3600)
+    bridge = StreamingBridge(spec)
+    bridge.run_batch(_bridge_input(spark, rows))
+    out = spark.read.parquet(tmpdirs["sink"])
+    sink_ids = {r["stream_id"] for r in
+                out.select("stream_id").distinct().collect()}
+    assert sink_ids == {"//ok/a", "//ok/b"}
+    assert bridge.registry.stream_ids == sorted(sink_ids)
+    assert spark.read.parquet(tmpdirs["dead"]).count() == 3
+    assert bridge.logger.report() == (4, 1)
+
+
+def test_compiled_transform_sees_last_duplicate_key(spark, tmpdirs):
+    """JSON.parse keeps the LAST value of a duplicate key (and accepts
+    the payload); so do the bridge's validity check and the compiled
+    transform, flat and nested."""
+    rows = [("/t", '{"v": 1, "v": 2, "o": {"k": "x", "k": "y"}}')]
+    spec = PipelineSpec(transform='{"v2": v * 2, "k": o.k}',
+                        sink_dir=tmpdirs["sink"], log_interval=3600)
+    bridge = StreamingBridge(spec)
+    bridge.run_batch(_bridge_input(spark, rows))
+    assert bridge.transform_backend == "compiled"
+    out = spark.read.parquet(tmpdirs["sink"]).collect()
+    assert [json.loads(r["message"]) for r in out] == [{"v2": 4, "k": "y"}]
 
 
 def test_interpreted_fallback(spark, tmpdirs):
